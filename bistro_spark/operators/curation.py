@@ -3945,9 +3945,7 @@ def bucketed_batches(
     return (
         ranked.join(F.broadcast(offs), "bucket_max")
         .withColumn(
-            "batch_no",
-            ((F.col("rank") - F.col("_off")) / batch_size)
-            .cast("long"),
+            "batch_no", F.expr(f"(rank - _off) DIV {int(batch_size)}")
         )
         .groupBy("bucket_max", "batch_no")
         .agg(

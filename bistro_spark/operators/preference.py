@@ -48,6 +48,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _check_all_pairs_margin(policy: str, min_margin: int) -> None:
+    if policy == "all_pairs" and min_margin < 1:
+        raise ValueError(
+            f"preference_pairs: all_pairs needs min_margin >= 1, got "
+            f"{min_margin} (a margin <= 0 pairs candidates with themselves "
+            "and equal rewards both ways)"
+        )
+
+
 def preference_pairs(
     df: DataFrame,
     prompt_col: str = "prompt_id",
@@ -66,9 +75,12 @@ def preference_pairs(
     ``all_pairs``: every ordered pair with margin ≥ ``min_margin``;
     equal-reward candidates never pair (no preference either way), so
     the pair set is a strict half-matrix and chosen/rejected labels are
-    unambiguous. NULL rewards raise loudly — under a numeric window max
-    or a `>` join they would silently vanish from one side.
+    unambiguous. ``all_pairs`` therefore requires ``min_margin ≥ 1``
+    (a margin ≤ 0 would pair each candidate with itself and equal
+    rewards both ways). NULL rewards raise loudly — under a numeric
+    window max or a `>` join they would silently vanish from one side.
     """
+    _check_all_pairs_margin(policy, min_margin)
     if df.filter(F.col(reward_col).isNull()).limit(1).count():
         raise ValueError("preference_pairs: NULL reward")
     base = df.select(
@@ -132,6 +144,7 @@ def preference_pairs_sql(
     """DuckDB twin. ``cand_table`` is a full SELECT producing the
     candidate rows (prompt, cand, reward); the twin re-derives the
     chosen row definitionally with a rank window."""
+    _check_all_pairs_margin(policy, min_margin)
     if policy == "best_vs_rest":
         return f"""
           WITH c AS ({cand_table}),

@@ -9,22 +9,25 @@ graph). A single worker thread gives a total order over mutations, hence
 deterministic results.
 
 Here a micro-batch IS the ActionAdd delta, retention is applied to a
-buffered window, and "evaluate" recompiles the calculus over the retained
-population — semantically identical to the reference, whose accu/roll
-columns always reflect the *current* table contents after eviction
-(``Table.java#remove`` shrinks the population; ``Schema.java#evaluate``
-re-aggregates). Two state strategies:
+buffered window, and "evaluate" re-aggregates the retained population —
+semantically identical to the reference, whose accu/roll columns always
+reflect the *current* table contents after eviction (``Table.java#remove``
+shrinks the population; ``Schema.java#evaluate`` re-aggregates). Two modes:
 
 - ``retention=None`` (add-only streams): per-group aggregate state is
-  MERGED batch-over-batch (state ∝ #groups — the scalable path, what
-  Structured Streaming's state store does for us in streaming mode).
-- count- or age-based retention: the runner buffers the retained rows
-  (state ∝ window size, same asymptotics as Spark's windowed state) and
-  recomputes aggregates per batch.
+  MERGED batch-over-batch (state ∝ #groups — what Structured Streaming's
+  state store does for us in streaming mode).
+- count- or age-based retention: per delta the prepared delta is unioned
+  with the retained window, coalesced to the session's default parallelism
+  and pinned ONCE (calc and link run exactly once, inside the pin job);
+  the eviction predicate is computed on the pinned rows and the window is
+  kept as a lazy filter over them. ``result()`` aggregates the window. The
+  window's partition count stays bounded and one checkpoint is live.
 
-This mode exists for (a) row-for-row parity tests against the oracle with
-scripted batch boundaries, (b) count-based retention, which Structured
-Streaming cannot express (no count-based windows) — SURVEY.md §7.3/§7.4.
+The runner exists for row-for-row parity tests against the oracle with
+scripted batch boundaries, and for delta-driven evaluation outside
+Structured Streaming. The streaming form of count retention is
+``state.py#fifo_window_stream``.
 """
 
 from __future__ import annotations
@@ -38,17 +41,16 @@ from pyspark.sql import functions as F
 
 @dataclass
 class AggSpec:
-    """A merge-able accumulate: per-batch partial + cross-batch merge.
+    """A merge-able accumulate: per-batch aggregate + cross-batch merge.
 
     sum/count merge with sum; min/max with min/max. avg must be declared as
     (sum, count) pairs and finalized — the classic partial-aggregate trick
-    Spark itself uses for partial+final aggregation.
+    Spark itself uses for partial+final aggregation. ``merge_expr`` is
+    read by add-only mode; retention mode re-aggregates the window with
+    ``batch_expr``.
 
-    ``invertible=True`` declares the merge additive (sum/count): eviction
-    can then be UN-folded by subtracting the evicted span's partial instead
-    of re-aggregating the whole retained buffer (the reference's accu
-    shrink-on-remove, ColumnDefinitionAccu over the removed span). min/max
-    have no inverse — leave False and the runner falls back to recompute.
+    ``default`` and ``invertible`` are unread; they remain only so that
+    existing positional/keyword callers keep working.
     """
 
     name: str
@@ -85,7 +87,6 @@ class IncrementalRunner:
         retention_age: str | None = None,  # SQL interval, e.g. "30 seconds"
         order_col: str = "batch_ofs",
         time_col: str = "event_time",
-        unfold: bool | None = None,  # None = auto (on iff all invertible)
     ):
         self.spark = spark
         self.prepare = prepare
@@ -97,35 +98,8 @@ class IncrementalRunner:
         self.time_col = time_col
         self._buffer: DataFrame | None = None  # retained window (retention mode)
         self._state: DataFrame | None = None  # merged aggregates (add-only mode)
-        self._pin_ids: set[int] = set()  # executor blocks owned by buffer+state
-        # un-fold mode: retention active AND every fold is invertible →
-        # aggregate state is updated by (add delta partial, subtract evicted
-        # partial); per-batch AGGREGATION work ∝ |delta| + |evicted| instead
-        # of |window|. The buffer is still retained (eviction membership
-        # needs it), but it is only filtered, never re-aggregated. A hidden
-        # count column tracks live rows per group so fully-evicted groups
-        # drop out of the read-out exactly as they do under recompute.
-        auto = self._needs_buffer() and bool(aggs) and all(
-            a.invertible for a in aggs
-        )
-        if unfold and not auto:
-            raise ValueError(
-                "unfold=True requires retention and all-invertible aggs"
-            )
-        self._unfold = auto if unfold is None else unfold
+        self._pin_ids: set[int] = set()  # executor blocks owned by buffer/state
         self.batches_seen = 0
-
-    _N = "__live_rows"
-
-    def _partial(self, df: DataFrame, negate: bool = False) -> DataFrame:
-        sign = -1 if negate else 1
-        return df.groupBy(*self.group_keys).agg(
-            *[
-                (F.expr(a.batch_expr) * sign).alias(a.name)
-                for a in self.aggs
-            ],
-            (F.count(F.lit(1)) * sign).alias(self._N),
-        )
 
     # -- ActionAdd + ActionEval --------------------------------------------
 
@@ -135,51 +109,20 @@ class IncrementalRunner:
 
         self.batches_seen += 1
         prepared = self.prepare(batch_df)
-        # previous batch's pinned buffer/state blocks: still read while the
-        # new state derives from them, released once the new pins are eager-
-        # materialized — without this, a long-running stream leaks one
-        # checkpoint per micro-batch (round-3 storage-lifecycle fix)
-        old_ids, new_ids = self._pin_ids, set()
+        # the previous pins are still read while the new ones derive from
+        # them; release them once the new pin is eager-materialized, or a
+        # long-running stream leaks one checkpoint per micro-batch
+        old_ids = self._pin_ids
 
         if self._needs_buffer():
             buf = prepared if self._buffer is None else self._buffer.unionByName(prepared)
-            keep = self._keep_predicate(buf)
-            retained = buf.filter(keep) if keep is not None else buf
-            # localCheckpoint truncates the ever-growing union lineage —
-            # without it plan depth grows per batch (the classic
-            # iterative-union pitfall).
-            self._buffer, ids = pin(retained)
-            new_ids |= ids
-            if self._unfold:
-                from functools import reduce
-
-                parts = [self._partial(prepared)]
-                if keep is not None:
-                    parts.append(self._partial(buf.filter(~keep), negate=True))
-                if self._state is not None:
-                    parts.append(self._state)
-                merged = (
-                    reduce(lambda a, b: a.unionByName(b), parts)
-                    .groupBy(*self.group_keys)
-                    .agg(
-                        *[
-                            F.expr(f"sum({a.name})").alias(a.name)
-                            for a in self.aggs
-                        ],
-                        F.expr(f"sum({self._N})").alias(self._N),
-                    )
-                    # prune fully-evicted groups from STATE, not just from
-                    # read-out: otherwise state grows with all-time
-                    # distinct keys instead of live keys. Safe — a
-                    # reappearing key re-enters via its next delta partial.
-                    # Caveat (documented, inherent to un-fold): double
-                    # add/subtract partials accumulate FP drift vs
-                    # recompute over very long runs; re-anchor periodically
-                    # from the retained buffer if bit-parity matters.
-                    .filter(F.col(self._N) != 0)
-                )
-                self._state, ids = pin(merged)
-                new_ids |= ids
+            # localCheckpoint truncates the ever-growing union lineage, and
+            # coalesce stops the partition count growing with every union
+            pinned, self._pin_ids = pin(
+                buf.coalesce(self.spark.sparkContext.defaultParallelism)
+            )
+            keep = self._keep_predicate(pinned)
+            self._buffer = pinned.filter(keep) if keep is not None else pinned
         else:
             partial = prepared.groupBy(*self.group_keys).agg(
                 *[F.expr(a.batch_expr).alias(a.name) for a in self.aggs]
@@ -197,10 +140,8 @@ class IncrementalRunner:
                         ]
                     )
                 )
-            self._state, ids = pin(merged)
-            new_ids |= ids
+            self._state, self._pin_ids = pin(merged)
         release(self.spark, old_ids)
-        self._pin_ids = new_ids
 
     def _needs_buffer(self) -> bool:
         return self.retention_count is not None or self.retention_age is not None
@@ -208,8 +149,7 @@ class IncrementalRunner:
     def _keep_predicate(self, buf: DataFrame):
         """ActionRemove as a predicate: FIFO count eviction / age eviction
         (server/.../actions/ActionRemove.java; age variant = the watermark
-        analog). Returns a Column (rows to KEEP) or None if nothing evicts;
-        the un-fold path negates it to aggregate exactly the evicted span.
+        analog). Returns a Column (rows to KEEP) or None if nothing evicts.
         """
         preds = []
         if self.retention_count is not None:
@@ -242,18 +182,11 @@ class IncrementalRunner:
 
     def result(self) -> DataFrame:
         """Current accumulate values (the reference's getValue read-out
-        after evaluate).
-
-        In un-fold mode this is a plain read of the maintained state —
-        groups whose rows were all evicted are dropped via the hidden
-        live-row count, and NO aggregation over the retained buffer appears
-        in the plan (asserted by tests); recompute mode re-aggregates the
-        buffer (the fallback for non-invertible folds)."""
+        after evaluate). Retention mode aggregates the retained window;
+        add-only mode reads the merged state."""
         if self._needs_buffer():
             if self._buffer is None:
                 raise ValueError("no batches added")
-            if self._unfold:
-                return self._state.filter(F.col(self._N) > 0).drop(self._N)
             return self._buffer.groupBy(*self.group_keys).agg(
                 *[F.expr(a.batch_expr).alias(a.name) for a in self.aggs]
             )

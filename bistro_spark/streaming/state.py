@@ -180,12 +180,10 @@ def fifo_window_stream(
     add-delta/subtract-evicted, min/max by monotonic deques (front = the
     window extremum; push pops dominated tails, evict pops expired
     fronts — amortized O(1) per element, so per-batch AGGREGATION work is
-    ∝ |delta| + |evicted|, never a scan of the retained window — the
-    eviction un-fold for the non-invertible folds that
-    IncrementalRunner's subtract trick cannot cover). The value buffer is
-    still retained (eviction membership needs it), bounding state by
-    groups × max_len. Caveat: the running sum accumulates float drift vs
-    recompute over very long runs (same caveat as un-fold; parity is
+    ∝ |delta| + |evicted|, never a scan of the retained window). The
+    value buffer is still retained (eviction membership needs it),
+    bounding state by groups × max_len. Caveat: the running sum
+    accumulates float drift vs recompute over very long runs (parity is
     asserted to 1e-6).
 
     The reference's max-length queue is per-table and single-threaded; a

@@ -73,8 +73,9 @@ def test_dedup_assignment_release_hook(spark, sf_dir):
 
 
 def test_streaming_state_pins_bounded_over_batches(spark):
-    """IncrementalRunner re-pins state per batch; old blocks must be freed
-    (a long-running stream would otherwise leak one checkpoint/batch)."""
+    """IncrementalRunner re-pins its window per batch; old blocks must be
+    freed (a long-running stream would otherwise leak one checkpoint per
+    batch)."""
     from bistro_spark.streaming.incremental import AggSpec, IncrementalRunner
 
     runner = IncrementalRunner(
@@ -95,6 +96,10 @@ def test_streaming_state_pins_bounded_over_batches(spark):
         runner.add_batch(batch)
         sizes.append(len(pinned_ids(spark) - base))
     assert max(sizes) == sizes[0]  # steady per-batch pin count, no growth
+    # the retained window is coalesced per delta: its partition count does
+    # not grow with every union
+    parts = runner.window().rdd.getNumPartitions()
+    assert parts <= spark.sparkContext.defaultParallelism, parts
     release(spark, runner._pin_ids)
 
 

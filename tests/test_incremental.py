@@ -169,55 +169,47 @@ UNFOLD_AGGS = [
 
 
 @pytest.mark.parametrize(
-    "retention", [{"retention_count": 300}, {"retention_age": "60 seconds"}]
+    "retention, first_kept",
+    [
+        ({"retention_count": 300}, lambda seen: seen - 300),
+        # event_time = t0 + i*250ms: the last 240 rows are within 60 s
+        ({"retention_age": "60 seconds"}, lambda seen: seen - 240),
+    ],
+    ids=["count", "age"],
 )
-def test_incremental_unfold_equals_recompute(spark, batches, retention):
-    """Eviction un-fold (state += delta partial − evicted partial) must
-    match the recompute fallback after EVERY batch of the scripted
-    add/evict sequence — the reference's accu shrink-on-remove parity."""
+def test_incremental_retention_trajectory(spark, batches, retention, first_kept):
+    """After EVERY batch of the scripted add/evict sequence the result
+    equals recompute over the rows retained so far — the reference's
+    evaluate-after-every-add with ActionRemove in between."""
     full, parts = batches
-    unfolded = IncrementalRunner(
+    runner = IncrementalRunner(
         spark, lambda b: prepare_facts(spark, b), ["src"], UNFOLD_AGGS,
         **retention,
     )
-    recompute = IncrementalRunner(
-        spark, lambda b: prepare_facts(spark, b), ["src"], UNFOLD_AGGS,
-        unfold=False, **retention,
-    )
-    assert unfolded._unfold and not recompute._unfold
-    for b in parts:
-        unfolded.add_batch(b)
-        recompute.add_batch(b)
-        got = {r["src"]: r.asDict() for r in unfolded.result().collect()}
-        want = {r["src"]: r.asDict() for r in recompute.result().collect()}
-        assert got == want
+    seen = 0
+    for b, size in zip(parts, SPLITS):
+        runner.add_batch(b)
+        seen += size
+        live = full.filter(
+            (F.col("batch_ofs") >= first_kept(seen))
+            & (F.col("batch_ofs") < seen)
+        )
+        oracle = {
+            r["src"]: r.asDict()
+            for r in prepare_facts(spark, live)
+            .groupBy("src")
+            .agg(
+                F.expr("count(*)").alias("n_seq"),
+                F.expr("sum(n_tok_calc)").alias("sum_tok"),
+            )
+            .collect()
+        }
+        assert _res(runner) == oracle, f"prefix {seen}"
 
 
-def test_incremental_unfold_readout_plan(spark, batches):
-    """Per-batch work ∝ delta: the un-fold read-out is a plain state read —
-    its physical plan contains NO aggregation over the retained buffer,
-    while the recompute fallback's read-out does."""
-    full, parts = batches
-    unfolded = IncrementalRunner(
-        spark, lambda b: prepare_facts(spark, b), ["src"], UNFOLD_AGGS,
-        retention_count=300,
-    )
-    recompute = IncrementalRunner(
-        spark, lambda b: prepare_facts(spark, b), ["src"], UNFOLD_AGGS,
-        unfold=False, retention_count=300,
-    )
-    unfolded.add_batch(parts[0])
-    recompute.add_batch(parts[0])
-    plan_u = unfolded.result()._jdf.queryExecution().executedPlan().toString()
-    plan_r = recompute.result()._jdf.queryExecution().executedPlan().toString()
-    assert "Aggregate" not in plan_u
-    assert "Aggregate" in plan_r
-
-
-def test_incremental_unfold_prunes_dead_groups(spark):
-    """A group whose rows are ALL evicted must leave the un-fold state
-    entirely (not persist as a __live_rows == 0 tombstone through every
-    merge): state size tracks LIVE keys, not all-time distinct keys."""
+def test_incremental_retention_drops_dead_groups(spark):
+    """A group whose rows are ALL evicted leaves the read-out: result()
+    tracks LIVE keys, not all-time distinct keys."""
     mk = lambda src, lo, n: spark.createDataFrame(
         [(src, 10, i) for i in range(lo, lo + n)],
         "src string, n_tok_calc long, batch_ofs long",
@@ -225,23 +217,8 @@ def test_incremental_unfold_prunes_dead_groups(spark):
     runner = IncrementalRunner(
         spark, lambda b: b, ["src"], UNFOLD_AGGS, retention_count=10
     )
-    assert runner._unfold
     runner.add_batch(mk("a", 0, 5))
     runner.add_batch(mk("b", 5, 5))
+    assert {r["src"] for r in runner.result().collect()} == {"a", "b"}
     runner.add_batch(mk("b", 10, 5))  # evicts ofs 0-4 → group 'a' dead
     assert {r["src"] for r in runner.result().collect()} == {"b"}
-    state_keys = {r["src"] for r in runner._state.collect()}
-    assert state_keys == {"b"}, state_keys
-
-
-def test_incremental_unfold_auto_fallback(spark):
-    """max() has no inverse → auto mode must fall back to recompute, and
-    forcing unfold=True must be rejected."""
-    r = IncrementalRunner(
-        spark, lambda b: b, ["src"], AGGS, retention_count=10
-    )
-    assert not r._unfold
-    with pytest.raises(ValueError):
-        IncrementalRunner(
-            spark, lambda b: b, ["src"], AGGS, retention_count=10, unfold=True
-        )

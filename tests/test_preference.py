@@ -104,6 +104,12 @@ def test_all_pairs_policy_and_guard(spark):
     assert (20, 21) not in got  # margin 0: ties never pair either way
     with pytest.raises(ValueError, match="max_group"):
         preference_pairs(df, policy="all_pairs", max_group=2)
+    # a margin <= 0 would self-pair and pair ties both ways
+    for m in (0, -1):
+        with pytest.raises(ValueError, match="min_margin"):
+            preference_pairs(df, policy="all_pairs", min_margin=m)
+        with pytest.raises(ValueError, match="min_margin"):
+            preference_pairs_sql("SELECT 1", policy="all_pairs", min_margin=m)
     with pytest.raises(ValueError, match="policy"):
         preference_pairs(df, policy="nope")
 

@@ -398,6 +398,10 @@ def chunk_spans_sql(
 
 # ------------------------------------------------------ sequence packing ----
 
+# Row bound for one shard's pandas frame in the sharded packing kernels
+# (~1.2 GB of (id, len) Arrow): a larger shard must not reach one task.
+MAX_ROWS_PER_SHARD = 50_000_000
+
 
 def pack_sequences(
     df: DataFrame,
@@ -405,7 +409,7 @@ def pack_sequences(
     len_col: str = "n_words",
     capacity: int = 256,
     n_shards: int | None = 4,
-    max_rows_per_shard: int = 50_000_000,
+    max_rows_per_shard: int = MAX_ROWS_PER_SHARD,
 ) -> DataFrame:
     """Greedy no-split sequence packing (the training-batch "packing" step:
     concatenate whole documents into fixed-capacity token buffers).
@@ -4410,10 +4414,14 @@ def attention_cost_sweep(
     over the shard's in-memory length vector (the pack_capacity_sweep
     discipline: extra capacities cost numpy loops, never corpus
     passes); output is |capacities| × n_shards rows at any corpus size,
-    all integer except nothing — even the savings is integer ppm."""
+    all integer except nothing — even the savings is integer ppm.
+
+    A shard above :data:`MAX_ROWS_PER_SHARD` rows raises ``ValueError``
+    in its task instead of OOM-ing the executor."""
     import pandas as pd
 
     caps = tuple(int(c) for c in capacities)
+    max_rows = MAX_ROWS_PER_SHARD  # the driver's value ships with the kernel
     src = df.select(
         F.col(id_col),
         (F.col(id_col) % n_shards).cast("int").alias("shard"),
@@ -4425,8 +4433,15 @@ def attention_cost_sweep(
     )
 
     def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
         shard = int(pdf["shard"].iloc[0])
+        if len(pdf) > max_rows:
+            raise ValueError(
+                f"attention_cost_sweep: shard {shard} holds {len(pdf)} rows "
+                f"> MAX_ROWS_PER_SHARD={max_rows}; raise n_shards to "
+                f"~corpus_rows/{max_rows} so each shard's pandas frame fits "
+                f"in one task"
+            )
+        pdf = pdf.sort_values(id_col).reset_index(drop=True)
         lens = pdf["len"].to_numpy()
         out = []
         for cap in caps:

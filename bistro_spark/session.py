@@ -4,8 +4,10 @@ Defaults are chosen for the north-rule workload (wide fact table of
 pre-tokenized sequences, skewed ``source`` key, Arrow-heavy UDF paths):
 
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing),
-- explicit shuffle-partition count sized to the local core budget
-  (on a real cluster: ~2-3x total executor cores),
+- explicit shuffle-partition count equal to the local core count: each
+  stateful micro-batch commits one state-store version per shuffle
+  partition, so partitions beyond the cores add a second wave of tasks
+  to every trigger (on a real cluster: ~2-3x total executor cores),
 - Arrow enabled for pandas UDF exchange with a bounded batch size so
   512-element int32 token arrays don't blow executor memory,
 - broadcast threshold high enough that dimension tables (sources, date
@@ -29,10 +31,11 @@ def get_spark(
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     cores = _parse_local_cores(master)
     if shuffle_partitions is None:
-        # 1x cores locally: local mode has no executor skew to smooth over,
-        # and fewer partitions = less scheduling overhead at test scale.
+        # 1x cores locally: every stateful micro-batch commits one
+        # state-store version (and writes one sink part) per shuffle
+        # partition, so partitions beyond the cores run as a second wave.
         # On a cluster this should be 2-3x total cores (set via extra_conf).
-        shuffle_partitions = max(cores, 8)
+        shuffle_partitions = cores
 
     builder = (
         SparkSession.builder.master(master)

@@ -136,6 +136,12 @@ def sources_dim(spark: SparkSession) -> DataFrame:
     Mirrors the reference's GROUPS fixture (Tests.java link/accu cases):
     includes a group that receives no facts ('archive') so empty-group
     defaults are exercised.
+
+    Built as a SQL ``VALUES`` relation, which plans as a JVM
+    ``LocalTableScan``: the link is re-planned on every micro-batch or
+    delta, and ``createDataFrame`` over Python rows would plan a pickled
+    RDD scan whose re-broadcast waits on a Python worker each time.  The
+    columns come out non-nullable.
     """
     rows = [
         ("web", 1.0, "crawl"),
@@ -144,4 +150,7 @@ def sources_dim(spark: SparkSession) -> DataFrame:
         ("wiki", 1.5, "dump"),
         ("archive", 9.9, "cold"),  # receives no facts
     ]
-    return spark.createDataFrame(rows, "source string, weight double, origin string")
+    values = ", ".join(f"('{s}', {w}D, '{o}')" for s, w, o in rows)
+    return spark.sql(
+        f"SELECT * FROM VALUES {values} AS sources(source, weight, origin)"
+    )

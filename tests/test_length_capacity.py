@@ -5,6 +5,7 @@ per-capacity consistency with pack_sequences, and the SQL twins."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from bistro_spark.operators.curation import (
@@ -363,3 +364,20 @@ def test_attention_cost_sweep_consistency(spark):
             got[(c, shard)]["savings_ppm"] for c in caps
         )
         assert s64 < s128 < s256
+
+
+def test_attention_cost_sweep_row_guard(spark, monkeypatch):
+    """A shard above MAX_ROWS_PER_SHARD raises with n_shards sizing
+    guidance instead of loading the whole shard into one task."""
+    from bistro_spark.operators import curation
+
+    rows = [(i, (i * 37) % 90 + 1) for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id long, n_tok long")
+    monkeypatch.setattr(curation, "MAX_ROWS_PER_SHARD", 5)
+    with pytest.raises(Exception, match="raise n_shards"):
+        curation.attention_cost_sweep(df, capacities=(64,)).collect()
+    # enough shards keep every shard under the bound
+    got = curation.attention_cost_sweep(
+        df, capacities=(64,), n_shards=8
+    ).collect()
+    assert len(got) == 8

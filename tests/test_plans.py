@@ -49,6 +49,10 @@ def test_link_is_broadcast_join_no_fact_shuffle(spark):
     # the only exchange is the broadcast of the dim, never a hash
     # repartition of the facts
     assert "Exchange hashpartitioning" not in plan
+    # the dim is a JVM local relation: re-broadcasting it per micro-batch
+    # must not scan a pickled Python RDD
+    assert "LocalTableScan" in plan
+    assert "Scan ExistingRDD" not in plan
 
 
 def test_accu_columns_fuse_into_one_aggregation(spark):

@@ -14,9 +14,11 @@ import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_spark_submit_stream_pipeline(spark, tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.bench_scaling import build_zip
 
     from bistro_spark.sources.tokens import token_table_fast
@@ -33,7 +35,7 @@ def test_spark_submit_stream_pipeline(spark, tmp_path):
         "--conf", "spark.sql.session.timeZone=UTC",
         "--conf", "spark.ui.enabled=false",
         "--py-files", zpath,
-        "/root/repo/bistro_spark/jobs/stream_pipeline.py",
+        os.path.join(REPO, "bistro_spark/jobs/stream_pipeline.py"),
         "--input", inp,
         "--checkpoint", os.path.join(work, "ck"),
         "--sink", os.path.join(work, "out"),

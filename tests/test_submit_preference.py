@@ -13,6 +13,8 @@ import sys
 
 from pyspark.sql import functions as F
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 
 
@@ -32,7 +34,7 @@ def _run(zpath, cand_dir, work):
         "--conf", "spark.sql.session.timeZone=UTC",
         "--conf", "spark.ui.enabled=false",
         "--py-files", zpath,
-        "/root/repo/bistro_spark/jobs/preference_stream.py",
+        os.path.join(REPO, "bistro_spark/jobs/preference_stream.py"),
         "--candidates", cand_dir,
         "--checkpoint", os.path.join(work, "ck"),
         "--pairs", os.path.join(work, "pairs"),
@@ -45,7 +47,7 @@ def _run(zpath, cand_dir, work):
 
 
 def test_spark_submit_preference_job_and_resume(spark, tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.bench_scaling import build_zip
 
     from bistro_spark.operators.preference import (

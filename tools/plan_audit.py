@@ -22,10 +22,12 @@ product table — its cross join is the semantics, not a bug).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as ent  # noqa: E402
 from bistro_spark.caching import pin_scope  # noqa: E402
@@ -180,7 +182,7 @@ def main() -> None:
         f"- `{q}` — {why}" for q, why in sorted(CROSS_JOIN_SANCTIONED.items())
     ]
     lines += ["", f"Hard red flags found: {flagged or 'none'}."]
-    with open("/root/repo/BENCH/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines[-2:]))
     print(f"wrote BENCH/PLANS.md ({len(rows)} queries)")

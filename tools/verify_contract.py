@@ -10,12 +10,14 @@ Usage: python tools/verify_contract.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as ent  # noqa: E402
 from bistro_spark.caching import pin_scope  # noqa: E402
